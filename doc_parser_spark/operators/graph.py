@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from doc_parser_spark.forks import fork
+
 
 def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(oriented edges, wedge rows) under the (degree, id) total order.
@@ -47,14 +49,13 @@ def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # two orientation joins, and the caller's edge frame is typically an
     # LSH candidate-pair pipeline whose tail (the exact-Jaccard verify)
     # re-runs per branch without this persist. Constant-width (2 longs).
-    e = (
+    e = fork(
         edges.select(
             F.least("a_id", "b_id").alias("u"),
             F.greatest("a_id", "b_id").alias("v"),
         )
         .where(F.col("u") < F.col("v"))
         .distinct()
-        .persist()
     )
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("x"))
@@ -70,14 +71,12 @@ def _oriented_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # (both wedge sides + the closing-edge probe), and unlike the old id
     # orientation its lineage now embeds the degree aggregate + two joins
     # — without the persist each branch re-runs all of it. Constant-width
-    # (3 longs), evictable, recomputed from the edge frame if dropped;
-    # released via the ``_oriented_cache`` handle on the result.
-    oriented = ed.select(
+    # (3 longs), evictable, recomputed from the edge frame if dropped.
+    oriented = fork(ed.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("x"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("y"),
         F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    ).persist()
-    oriented._edges_cache = e  # type: ignore[attr-defined]
+    ))
     wedges = (
         oriented.alias("e1")
         .join(
@@ -111,10 +110,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         oriented.alias("e3"),
         (F.col("y1") == F.col("e3.x")) & (F.col("y2") == F.col("e3.y")),
     )
-    out = tri.agg(F.count("*").cast("long").alias("n_triangles"))
-    out._oriented_cache = oriented  # type: ignore[attr-defined]
-    out._edges_cache = getattr(oriented, "_edges_cache", None)  # type: ignore[attr-defined]
-    return out
+    return tri.agg(F.count("*").cast("long").alias("n_triangles"))
 
 
 def pagerank(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from doc_parser_spark.forks import fork
 from doc_parser_spark.functions.plain_extract import split_paragraphs
 from doc_parser_spark.functions.sanitize import sanitize_text
 from doc_parser_spark.operators.extract import extract_turns, with_content_type
@@ -3022,9 +3023,9 @@ def q_curate_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fork point (round 8, _CHAIN_CACHE_NOTE rule): flags feeds the
     # pack branch AND the final join; lineage = dedup window +
     # decontamination + sampling, re-derived per branch without this
-    flags = stratified_sample(
+    flags = fork(stratified_sample(
         deduped.join(dec, "doc_id"), "doc_id", "lang", SAMPLE_RATES
-    ).cache()
+    ))
     surv = flags.where("gate_pass AND keep AND NOT contaminated AND sampled")
     packed = pack_sequences(
         surv.select("doc_id", "payload"),
@@ -3268,7 +3269,7 @@ def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("b_id"), F.col("text").alias("b_text"))
         .alias("b")
     )
-    return (
+    return fork(  # see _CHAIN_CACHE_NOTE
         d.join(b, F.col("b_id") == F.col("d.doc_id") - F.col("d.doc_id") % 4)
         .where(F.col("d.doc_id") < 240)
         .select(
@@ -3289,7 +3290,6 @@ def _chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("payload"),
         )
-        .cache()  # see _CHAIN_CACHE_NOTE
     )
 
 
@@ -3553,11 +3553,11 @@ def q_curate_assemble_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch without this (CC itself is already materialized — the
     # driver solve returns local data — but the canonical/decontam/LM
     # joins are not)
-    flags = (
+    flags = fork(
         canon.join(dec, "doc_id")
         .join(lm.select("doc_id", "nll"), "doc_id")
         .withColumn("lm_pass", F.col("nll") <= F.lit(_LM_NLL_MAX))
-    ).cache()
+    )
     surv = flags.where("keep AND NOT contaminated AND lm_pass")
     packed = pack_sequences(
         surv.join(corpus, "doc_id").select("doc_id", "payload"),
@@ -5209,9 +5209,9 @@ def q_curate_assemble_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fork point (round 8, same rule as _CHAIN_CACHE_NOTE): train feeds
     # pack_segments AND the lang join-back, and its lineage is the whole
     # k-gram dup-fraction pipeline — measured ~0.7 s re-derived per branch
-    train = train_val_test_split(mixed, "doc_id").where(
+    train = fork(train_val_test_split(mixed, "doc_id").where(
         F.col("split") == "train"
-    ).cache()
+    ))
     packed = pack_segments(
         train, "doc_id", "text", budget=PACK_BUDGET, n_shards=PACK_SHARDS
     )

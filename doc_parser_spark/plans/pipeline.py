@@ -25,6 +25,7 @@ import os
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,24 +46,36 @@ def _extracted_path(output_path: str) -> str:
     return os.path.join(output_path, "extracted")
 
 
+def _read_manifest(spark: SparkSession, output_path: str) -> DataFrame | None:
+    """The commit manifest, or None when no run has committed one: the
+    directory is absent, or holds no data file (a crash inside the first
+    manifest write leaves only ``_temporary``). Any other failure — a
+    damaged part file above all — raises: reading it as "nothing
+    committed" would re-extract committed buckets under a new run id and
+    hide the committed rows from ``read_extracted``."""
+    try:
+        return spark.read.parquet(_manifest_path(output_path))
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def _read_manifest_meta(spark: SparkSession, output_path: str) -> int | None:
     """n_buckets recorded by prior runs (None if no manifest yet)."""
-    try:
-        row = spark.read.parquet(_manifest_path(output_path)).select(
-            "n_buckets"
-        ).first()
-        return int(row[0]) if row else None
-    except Exception:
+    manifest = _read_manifest(spark, output_path)
+    if manifest is None:
         return None
+    row = manifest.select("n_buckets").first()
+    return int(row[0]) if row else None
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> DataFrame | None:
     """Read the commit manifest if it exists → DataFrame[bucket_id]."""
-    path = _manifest_path(output_path)
-    try:
-        return spark.read.parquet(path).select("partition_id").distinct()
-    except Exception:
+    manifest = _read_manifest(spark, output_path)
+    if manifest is None:
         return None
+    return manifest.select("partition_id").distinct()
 
 
 def run_extraction_job(
@@ -73,7 +86,6 @@ def run_extraction_job(
     boilerplate_mode: str = "reference",
     job_run_id: str | None = None,
     resume: bool = True,
-    route_partitions: int | None = None,
     routing: str = "shuffle",
 ) -> dict:
     """Run the full pipeline; returns a summary dict (rows, wall_s, tps)."""
@@ -100,8 +112,8 @@ def run_extraction_job(
                 how="left_anti",
             )
 
-    # routing="shuffle": one exchange on (content_type, conv_id, turn_idx)
-    #   before the parse — content-homogeneous batches + whale salting.
+    # routing="shuffle": one exchange on (conv_id, turn_idx) before the
+    #   parse — turn-level salting spreads whale conversations.
     # routing="none": extract directly on scan partitions — the bucket
     #   write below is then the job's ONLY full exchange. Right when the
     #   source already yields well-sized splits (Iceberg) and payload mix
@@ -110,7 +122,7 @@ def run_extraction_job(
         extract_turns(
             work,
             boilerplate_mode=boilerplate_mode,
-            route_partitions=0 if routing == "none" else route_partitions,
+            route_partitions=0 if routing == "none" else None,
             keep_metrics_cols=True,
         )
         .withColumnRenamed("_n_bytes", "n_bytes_in")
@@ -178,15 +190,13 @@ def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
     commit log; a broadcast semi-join filters to them (manifest ≤ a few rows
     per bucket — no shuffle of the big side)."""
     df = spark.read.parquet(_extracted_path(output_path))
-    try:
-        committed = (
-            spark.read.parquet(_manifest_path(output_path))
-            .select(F.col("partition_id").alias("bucket_id"), "job_run_id")
-            .distinct()
-        )
-    except Exception:
+    manifest = _read_manifest(spark, output_path)
+    if manifest is None:
         # no manifest → nothing was ever committed
         return df.where(F.lit(False))
+    committed = manifest.select(
+        F.col("partition_id").alias("bucket_id"), "job_run_id"
+    ).distinct()
     return df.join(
         F.broadcast(committed), ["bucket_id", "job_run_id"], "left_semi"
     )

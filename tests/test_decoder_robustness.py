@@ -55,6 +55,14 @@ REF = Path("/root/reference")
 REF_JPEG = REF / "genon/preprocessor/sample_files/jpeg_sample.jpeg"
 REF_HWPX = REF / "genon/preprocessor/sample_files/hwpx_sample.hwpx"
 
+
+def _ref_bytes(path: Path) -> bytes:
+    """A reference fixture's bytes, read when the test runs; the test
+    skips, naming the path, when the reference checkout lacks it."""
+    if not path.is_file():
+        pytest.skip(f"reference fixture missing: {path}")
+    return path.read_bytes()
+
 # exception classes that signal MALFORMED DATA when a zip-container
 # extractor meets corrupt bytes; programming-error classes are absent on
 # purpose — seeing one of those IS the bug this suite exists to catch.
@@ -149,7 +157,7 @@ def test_reference_webp_corruption():
     schedule lives on the small synth lossy stream above; here the big
     reference fixture gets every truncation (all fail fast at the RIFF
     chunk walk or a partition bound) plus a handful of flips."""
-    payload = (REF / "tests/data/webp/webp-test.webp").read_bytes()
+    payload = _ref_bytes(REF / "tests/data/webp/webp-test.webp")
     _sweep_hard(decode_webp, payload, MediaDecodeError, n_flips=6,
                 n_truncs=15)
 
@@ -168,7 +176,7 @@ def test_filtered_lossy_webp_corruption():
 
 
 def test_reference_jpeg_corruption():
-    payload = REF_JPEG.read_bytes()
+    payload = _ref_bytes(REF_JPEG)
     _sweep_hard(decode_jpeg, payload, MediaDecodeError, n_flips=60,
                 n_truncs=15, check=_check_image)
 
@@ -189,7 +197,7 @@ def test_reference_pdf_corruption():
         key=lambda p: p.stat().st_size,
     )
     if not fixtures:
-        pytest.skip("no reference pdf fixtures")
+        pytest.skip(f"no reference pdf fixtures in {REF / 'tests/data/pdf'}")
     payload = fixtures[0].read_bytes()
     _sweep_hard(decode_pdf_pages, payload, PdfError, n_flips=40, n_truncs=10)
 
@@ -218,14 +226,18 @@ def _office_payloads():
     from doc_parser_spark.functions.pptx_extract import extract_pptx
     from doc_parser_spark.functions.xlsx_extract import extract_xlsx
 
+    # payloads are built when a test runs, not at collection: the
+    # reference one must skip, not break collection, when absent
     return [
-        ("docx", extract_docx,
-         synth_office.build_docx("T", ["alpha beta", "gamma"], ["x", "y"])),
-        ("xlsx", extract_xlsx,
-         synth_office.build_xlsx("S", [["a", "1"], ["b", "2"]])),
-        ("pptx", extract_pptx, synth_office.build_pptx("T", ["p", "q"])),
-        ("hwpx", extract_hwpx, synth_office.build_hwpx(1, "사례 본문 내용")),
-        ("hwpx-ref", extract_hwpx, REF_HWPX.read_bytes()),
+        ("docx", extract_docx, lambda: synth_office.build_docx(
+            "T", ["alpha beta", "gamma"], ["x", "y"])),
+        ("xlsx", extract_xlsx, lambda: synth_office.build_xlsx(
+            "S", [["a", "1"], ["b", "2"]])),
+        ("pptx", extract_pptx, lambda: synth_office.build_pptx(
+            "T", ["p", "q"])),
+        ("hwpx", extract_hwpx, lambda: synth_office.build_hwpx(
+            1, "사례 본문 내용")),
+        ("hwpx-ref", extract_hwpx, lambda: _ref_bytes(REF_HWPX)),
     ]
 
 
@@ -234,7 +246,7 @@ def _office_payloads():
                          ids=lambda v: v if isinstance(v, str) else "")
 def test_office_extractor_corruption(name, extractor, payload):
     n = 40 if name == "hwpx-ref" else 80
-    _sweep_soft(extractor, payload, n_flips=n, n_truncs=n // 4)
+    _sweep_soft(extractor, payload(), n_flips=n, n_truncs=n // 4)
 
 
 def test_office_envelope_never_raises():
@@ -242,7 +254,7 @@ def test_office_envelope_never_raises():
     ``failure`` status row — the property the executors rely on."""
     rng = random.Random(0x0FF1CE)
     for _, _, payload in _office_payloads()[:4]:
-        for corrupt in _corruptions(payload, rng, 40, 10):
+        for corrupt in _corruptions(payload(), rng, 40, 10):
             kind, text, spans, status = extract_office(corrupt)
             assert status in ("success", "partial_success", "failure",
                               "skipped")

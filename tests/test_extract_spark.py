@@ -288,3 +288,48 @@ class TestManifestGuard:
         run_extraction_job(spark, df, out, n_buckets=8, job_run_id="g1")
         with pytest.raises(ValueError, match="n_buckets=8"):
             run_extraction_job(spark, df, out, n_buckets=16, job_run_id="g2")
+
+    def test_damaged_manifest_raises(self, spark, transcripts_pdf, tmp_path):
+        """A damaged manifest part is not "nothing committed": read that
+        way, read_extracted hides every committed row and a resumed job
+        re-extracts every bucket under a new run id."""
+        from doc_parser_spark.plans.pipeline import (
+            read_extracted,
+            run_extraction_job,
+        )
+
+        df = spark.createDataFrame(transcripts_pdf.head(40))
+        out = tmp_path / "d"
+        run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="d1")
+        part = sorted((out / "_manifest").glob("part-*"))[0]
+        part.write_bytes(b"not a parquet file")
+        (part.parent / f".{part.name}.crc").unlink(missing_ok=True)
+        with pytest.raises(Exception, match="(?i)parquet"):
+            read_extracted(spark, str(out)).count()
+        with pytest.raises(Exception, match="(?i)parquet"):
+            run_extraction_job(spark, df, str(out), n_buckets=8,
+                               job_run_id="d2")
+
+    def test_manifest_without_data_files_is_uncommitted(
+        self, spark, transcripts_pdf, tmp_path
+    ):
+        """A crash inside the FIRST manifest write leaves a directory that
+        holds only the committer's _temporary: nothing was committed, and
+        the rerun must go ahead."""
+        from doc_parser_spark.plans.pipeline import (
+            read_extracted,
+            run_extraction_job,
+        )
+
+        import shutil
+
+        df = spark.createDataFrame(transcripts_pdf.head(40))
+        out = tmp_path / "t"
+        run_extraction_job(spark, df, str(out), n_buckets=8, job_run_id="t1")
+        shutil.rmtree(out / "_manifest")
+        (out / "_manifest" / "_temporary" / "0").mkdir(parents=True)
+        assert read_extracted(spark, str(out)).count() == 0
+        summary = run_extraction_job(spark, df, str(out), n_buckets=8,
+                                     job_run_id="t2")
+        assert summary["rows"] == 40
+        assert read_extracted(spark, str(out)).count() == 40

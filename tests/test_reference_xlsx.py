@@ -16,9 +16,23 @@ from tests.test_reference_fixtures import _parse_itxt
 XLSX_DIR = Path("/root/reference/tests/data/xlsx")
 GT_DIR = Path("/root/reference/tests/data/groundtruth/docling_v2")
 
-FIXTURES = sorted(
-    p.name for p in XLSX_DIR.iterdir() if (GT_DIR / f"{p.name}.itxt").exists()
+_NEEDS_REF = pytest.mark.skipif(
+    not XLSX_DIR.is_dir(), reason=f"reference fixtures missing: {XLSX_DIR}"
 )
+
+
+def _fixtures():
+    """Fixture names with groundtruth; one skipped case when the
+    reference checkout is absent (collection must not fail)."""
+    if not XLSX_DIR.is_dir():
+        return [pytest.param("", marks=_NEEDS_REF)]
+    return sorted(
+        p.name for p in XLSX_DIR.iterdir()
+        if (GT_DIR / f"{p.name}.itxt").exists()
+    )
+
+
+FIXTURES = _fixtures()
 
 
 @pytest.mark.parametrize("name", FIXTURES)
@@ -45,6 +59,7 @@ def test_xlsx_markdown_parity(name):
     assert ours == expected
 
 
+@_NEEDS_REF
 def test_extract_xlsx_surface():
     text, spans = extract_xlsx((XLSX_DIR / "test-01.xlsx").read_bytes())
     assert "first" in text and "col-4" in text

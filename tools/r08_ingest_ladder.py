@@ -128,11 +128,8 @@ def _ladder(spark, batch_path, index_path, in_batch_bands, tag):
 
     total = round(time.perf_counter() - t_all, 2)
     part = _partition_stats(kept)
-    for df in (kept, deduped, survivors, novels):
-        df.unpersist()
-    cached = getattr(pairs, "_lsh_bucket_cache", None)
-    if cached is not None:
-        cached.unpersist()
+    # the ladder's own caches and the operators' internal fork points
+    spark.catalog.clearCache()
     return {"tag": tag, "in_batch_bands": in_batch_bands, "total_s": total,
             "stages": results, "extract_partitions": part}
 
